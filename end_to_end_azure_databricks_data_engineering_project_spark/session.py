@@ -62,3 +62,19 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def inherit_spark_locals(fn):
+    """``fn`` wrapped to run on another driver thread with the calling
+    thread's Spark local properties (job group, job description,
+    scheduler pool) and session tags, copied now; ``fn`` itself when no
+    SparkContext is active."""
+    from pyspark import SparkContext
+    from pyspark.util import inheritable_thread_target
+
+    if SparkContext._active_spark_context is None:
+        return fn
+    session = SparkSession.getActiveSession()
+    if session is None:
+        return inheritable_thread_target(fn)
+    return inheritable_thread_target(session)(fn)

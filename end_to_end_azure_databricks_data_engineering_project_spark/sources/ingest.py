@@ -24,6 +24,7 @@ Spark-first design notes:
 from __future__ import annotations
 
 import datetime as _dt
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 from pathlib import Path
 
@@ -32,6 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from end_to_end_azure_databricks_data_engineering_project_spark.config import TableConfig
+from end_to_end_azure_databricks_data_engineering_project_spark.session import inherit_spark_locals
 from end_to_end_azure_databricks_data_engineering_project_spark.sources.watermark import EPOCH, WatermarkStore
 
 
@@ -126,25 +128,20 @@ def ingest_all(
     sources: dict[str, DataFrame],
     bronze_root: str,
     store: WatermarkStore,
-    parallel: int = 1,
 ) -> list[IngestResult]:
-    """≙ the ForEach loop over loop_input.json records.
-
-    ``parallel > 1`` runs per-table pulls on concurrent driver threads
-    (≙ ADF ForEach's parallel fan-out; Spark schedules the jobs FIFO
-    across the shared executor pool — safe because each table touches
-    disjoint bronze paths and watermark docs)."""
+    """≙ the ForEach loop over loop_input.json records, with ADF
+    ForEach's parallel fan-out: every table's pull runs on its own
+    driver thread and Spark shares the cores among their jobs — safe
+    because each table touches disjoint bronze paths and watermark
+    docs. Results come back in ``configs`` order; a failed pull
+    re-raises (the first in ``configs`` order) once every pull ended."""
     todo = [cfg for cfg in configs if cfg.table in sources]
-    if parallel <= 1:
-        return [
-            ingest_table(spark, cfg, sources[cfg.table], bronze_root, store)
-            for cfg in todo
-        ]
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=parallel) as pool:
+    with ThreadPoolExecutor(max_workers=max(len(todo), 1)) as pool:
         futs = [
-            pool.submit(ingest_table, spark, cfg, sources[cfg.table], bronze_root, store)
+            pool.submit(
+                inherit_spark_locals(ingest_table),
+                spark, cfg, sources[cfg.table], bronze_root, store,
+            )
             for cfg in todo
         ]
         return [f.result() for f in futs]

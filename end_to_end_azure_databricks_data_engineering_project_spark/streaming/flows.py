@@ -4,7 +4,10 @@ Re-expresses the reference's silver notebook (``silver_Dimensions.py`` —
 per-table: Autoloader read → cleanse → Delta append, trigger(once)) and
 the gold DLT pipeline (``src/gold/dlt/transformations/*.py`` — staging
 stream + expectations + ``create_auto_cdc_flow``) as a small registry of
-declared flows executed in dependency (topological) order.
+declared flows run as a DAG: each flow starts once every flow it depends
+on has succeeded, and flows with no path between them may run at the
+same time. The DAG is the contract — two flows that write the same table
+must declare a dependency.
 
 Design choices vs the reference:
  - Silver flows run as **batch drains** over the autoload ledger
@@ -21,7 +24,9 @@ Design choices vs the reference:
 from __future__ import annotations
 
 import os
+import time
 from collections.abc import Callable, Sequence
+from concurrent.futures import FIRST_COMPLETED, Future, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
 from pathlib import Path
 
@@ -33,6 +38,7 @@ from end_to_end_azure_databricks_data_engineering_project_spark.operators.cdc im
 from end_to_end_azure_databricks_data_engineering_project_spark.operators.expectations import (
     expect_all_or_drop,
 )
+from end_to_end_azure_databricks_data_engineering_project_spark.session import inherit_spark_locals
 from end_to_end_azure_databricks_data_engineering_project_spark.sources.autoload import (
     RESCUE_COL,
     FileLedger,
@@ -87,69 +93,103 @@ class Pipeline:
         on_event: Callable[[dict], None] | None = None,
         halt_on_failure: bool = True,
     ) -> dict[str, int]:
-        """Run every flow in dependency order.
+        """Run every flow, each as soon as every flow it depends on has
+        succeeded (≙ DLT resolving the declared flows into a DAG).
+
+        Flows with no path between them may run at the same time, each
+        on its own driver thread with the caller's Spark local
+        properties (job group, description, scheduler pool); Spark
+        shares the cores among their jobs. The DAG is the contract: two
+        flows that write the same table must declare a dependency.
 
         ``on_event``: optional observer called with one dict per flow
-        transition — ``{"flow", "status": running|succeeded|failed,
-        "rows", "seconds", "error"}`` — the engine-level analog of the
-        reference's failure alerting (readme.md:8 Logic-Apps email on
-        ADF failure; ``email_notifications`` in spotify_dab.job.yml):
-        the DELIVERY channel (email/webhook/pager) is platform wiring,
-        but the detection, the structured payload, and the run ledger
-        belong to the engine. Pair with ``run_report_hook`` to persist
-        a queryable ops table. Observer exceptions propagate — a
-        broken alerting channel must be loud, not best-effort.
+        transition — ``{"flow", "status": running|succeeded|failed|
+        skipped, "rows", "seconds", "error"}``: ``running``, then one
+        terminal event — the engine-level analog of the reference's
+        failure alerting (readme.md:8 Logic-Apps email on ADF failure;
+        ``email_notifications`` in spotify_dab.job.yml): the DELIVERY
+        channel (email/webhook/pager) is platform wiring, but the
+        detection, the structured payload, and the run ledger belong to
+        the engine. Pair with ``run_report_hook`` to persist a queryable
+        ops table. Every event is emitted on the calling thread, so
+        observers never run concurrently, and a flow's terminal event
+        is emitted before any of its dependents starts. Observer
+        exceptions propagate (once the running flows end) — a broken
+        alerting channel must be loud, not best-effort.
 
-        ``halt_on_failure=True`` (default) re-raises the first flow
-        error after emitting its failure event — downstream flows of a
-        failed dependency must not run against missing inputs.
-        ``False`` runs the remaining flows (recording each outcome)
-        and raises ONE summary error at the end."""
-        import time as _time
+        ``halt_on_failure=True`` (default): after the first flow error
+        no new flow starts, flows already running finish and emit their
+        terminal events, then the first error is re-raised — downstream
+        flows of a failed dependency must not run against missing
+        inputs. ``False`` runs every flow not downstream of a failure,
+        emits ``skipped`` for the (transitive) dependents of failed
+        flows, and raises ONE summary error at the end.
 
+        Returns ``{flow: rows}`` in topological order."""
+        order = self.topo_order()
+        pos = {n: i for i, n in enumerate(order)}
         results: dict[str, int] = {}
         failures: list[tuple[str, Exception]] = []
         unavailable: set[str] = set()  # failed flows + their dependents
+        waiting = list(order)  # neither started nor skipped yet
+        running: dict[Future, str] = {}
 
         def emit(evt: dict) -> None:
             if on_event is not None:
                 on_event(evt)
 
-        for n in self.topo_order():
-            skip = next(
-                (d for d in self.flows[n].depends_on if d in unavailable),
-                None,
-            )
-            if skip is not None:
-                unavailable.add(n)  # transitive dependents skip too
-                emit({"flow": n, "status": "skipped", "rows": None,
-                      "seconds": 0.0, "error": f"dependency {skip} failed"})
-                continue
-            emit({"flow": n, "status": "running", "rows": None,
-                  "seconds": None, "error": None})
-            t0 = _time.perf_counter()
+        def timed(run: Callable[[], int]) -> tuple[int | None, Exception | None, float]:
+            t0 = time.perf_counter()
             try:
-                rows = self.flows[n].run()
+                return run(), None, time.perf_counter() - t0
             except Exception as exc:
-                emit({"flow": n, "status": "failed", "rows": None,
-                      "seconds": round(_time.perf_counter() - t0, 3),
-                      "error": f"{type(exc).__name__}: {exc}"[:500]})
-                if halt_on_failure:
-                    raise
-                failures.append((n, exc))
-                unavailable.add(n)
-                continue
-            results[n] = rows
-            emit({"flow": n, "status": "succeeded", "rows": rows,
-                  "seconds": round(_time.perf_counter() - t0, 3),
-                  "error": None})
+                return None, exc, time.perf_counter() - t0
+
+        with ThreadPoolExecutor(max_workers=max(len(order), 1)) as pool:
+            while True:
+                if failures and halt_on_failure:
+                    waiting.clear()  # no new flow starts after a failure
+                # topological scan: a flow skipped here is seen by its
+                # dependents later in the same scan
+                for n in list(waiting):
+                    deps = [d for d in self.flows[n].depends_on if d in self.flows]
+                    skip = next((d for d in deps if d in unavailable), None)
+                    if skip is not None:
+                        waiting.remove(n)
+                        unavailable.add(n)
+                        emit({"flow": n, "status": "skipped", "rows": None,
+                              "seconds": 0.0, "error": f"dependency {skip} failed"})
+                    elif all(d in results for d in deps):
+                        waiting.remove(n)
+                        emit({"flow": n, "status": "running", "rows": None,
+                              "seconds": None, "error": None})
+                        fut = pool.submit(inherit_spark_locals(timed), self.flows[n].run)
+                        running[fut] = n
+                if not running:
+                    break
+                done, _ = wait(running, return_when=FIRST_COMPLETED)
+                for fut in sorted(done, key=lambda f: pos[running[f]]):
+                    n = running.pop(fut)
+                    rows, exc, secs = fut.result()
+                    if exc is None:
+                        results[n] = rows
+                        emit({"flow": n, "status": "succeeded", "rows": rows,
+                              "seconds": round(secs, 3), "error": None})
+                    else:
+                        failures.append((n, exc))
+                        unavailable.add(n)
+                        emit({"flow": n, "status": "failed", "rows": None,
+                              "seconds": round(secs, 3),
+                              "error": f"{type(exc).__name__}: {exc}"[:500]})
+        if failures and halt_on_failure:
+            raise failures[0][1]
         if failures:
             names = ", ".join(f for f, _ in failures)
             raise RuntimeError(
                 f"pipeline finished with {len(failures)} failed flow(s): "
                 f"{names}"
             ) from failures[0][1]
-        return results
+        return {n: results[n] for n in order if n in results}
 
 
 def silver_flow(
@@ -393,6 +433,12 @@ def gold_flow(
         marker = Path(state_root) / f"gold_{cfg.table}.applied_v"
         last_v = int(marker.read_text()) if marker.exists() else None
         cur_v = silver.current_version()
+        if last_v == cur_v:
+            # silver has not moved: nothing to drain, no Spark job. Not
+            # ``>=``: a recreated silver table restarts at a LOWER
+            # version and must take the full-read path below, which
+            # resets the cursor.
+            return 0
         src = silver.appended_since(last_v, until=cur_v)
         n = None
         if src is not None:

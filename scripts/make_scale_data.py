@@ -61,7 +61,7 @@ def main() -> None:
             reps = reps.withColumn(
                 k, (F.col(k) + F.col("__rep") * OFFSET).cast(dt)
             )
-        # 32 output files per table: a 1-2 file layout caps scan
+        # 64 output files per table: a 1-2 file layout caps scan
         # parallelism at 1-2 tasks and makes any core-count comparison
         # meaningless (keyed repartition — deterministic content)
         reps.drop("__rep").repartition(64, keys[0]).write.mode(

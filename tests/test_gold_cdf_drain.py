@@ -264,3 +264,29 @@ def test_silver_tables_enable_cdf_by_default(spark, medallion):
     assert gold.read().filter(
         f"user_id = 5 AND {END_AT} IS NULL"
     ).count() == 0
+
+
+def test_noop_gold_drain_runs_no_spark_job(spark, medallion, tmp_path):
+    """A gold drain with silver still at its cursor returns before
+    building any DataFrame: the second of two drains runs no Spark
+    job at all."""
+    pipe, _ = medallion
+    users = spark.createDataFrame(
+        [(i, f"user {i}", "US", "Premium", None, None, T1) for i in range(4, 8)],
+        "user_id int, user_name string, country string, subscription_type string,"
+        " start_date date, end_date date, updated_at timestamp",
+    )
+    ingest_all(spark, [TABLE_BY_NAME["dim_user"]], {"dim_user": users},
+               str(tmp_path / "bronze"), WatermarkStore(tmp_path / "state"))
+    assert pipe.flows["silver_dim_user"].run() == 4
+    sc = spark.sparkContext
+    rows = {}
+    for group in ("gold-drain-1", "gold-drain-2"):
+        sc.setJobGroup(group, "gold drain")
+        try:
+            rows[group] = pipe.flows["gold_dim_user"].run()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+    assert rows == {"gold-drain-1": 4, "gold-drain-2": 0}
+    assert sc.statusTracker().getJobIdsForGroup("gold-drain-1")
+    assert sc.statusTracker().getJobIdsForGroup("gold-drain-2") == []

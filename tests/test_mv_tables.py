@@ -117,7 +117,7 @@ def test_parallel_ingest_matches_serial(spark, tmp_path):
     cfgs = [TABLE_BY_NAME["dim_user"], TABLE_BY_NAME["dim_artist"]]
     res = ingest_all(
         spark, cfgs, {"dim_user": users, "dim_artist": artists},
-        str(tmp_path / "bronze"), WatermarkStore(tmp_path / "state"), parallel=2,
+        str(tmp_path / "bronze"), WatermarkStore(tmp_path / "state"),
     )
     assert {r.table: r.rows for r in res} == {"dim_user": 5, "dim_artist": 7}
 

@@ -5,6 +5,9 @@ and the persistent pipeline_runs ledger."""
 
 from __future__ import annotations
 
+import threading
+import time
+
 import pytest
 
 from end_to_end_azure_databricks_data_engineering_project_spark.sources.tables import Catalog
@@ -293,3 +296,195 @@ def test_crash_replay_alert_ledger_agreement_property(spark, tmp_path, _):
             shutil.rmtree(root, ignore_errors=True)
 
     run_property()
+
+
+# -- DAG scheduling -----------------------------------------------------------
+
+def test_independent_flows_run_concurrently():
+    """Two flows with no path between them run at the same time: both
+    must reach one barrier (a serial runner breaks it after the
+    timeout)."""
+    barrier = threading.Barrier(2, timeout=30)
+    pipe = Pipeline()
+    pipe.add(Flow("a", lambda: barrier.wait() + 1))
+    pipe.add(Flow("b", lambda: barrier.wait() + 1))
+    assert sorted(pipe.run_all().values()) == [1, 2]
+
+
+def test_flows_start_after_dependencies_end():
+    spans: dict[str, list[float]] = {}
+
+    def mk(name, secs):
+        def run():
+            spans[name] = [time.perf_counter()]
+            time.sleep(secs)
+            spans[name].append(time.perf_counter())
+            return 1
+        return run
+
+    pipe = Pipeline()
+    pipe.add(Flow("join", mk("join", 0.0), depends_on=("a", "b")))
+    pipe.add(Flow("a", mk("a", 0.2)))
+    pipe.add(Flow("b", mk("b", 0.05)))
+    pipe.add(Flow("a2", mk("a2", 0.1), depends_on=("a",)))
+    pipe.add(Flow("tail", mk("tail", 0.0), depends_on=("join", "a2")))
+    pipe.add(Flow("side", mk("side", 0.3)))
+    out = pipe.run_all()
+    # results come back in topological order, not completion order
+    assert list(out) == pipe.topo_order()
+    for name, flow in pipe.flows.items():
+        for dep in flow.depends_on:
+            assert spans[name][0] >= spans[dep][1], (name, dep)
+    # the independent branch overlapped the chain
+    assert spans["side"][0] < spans["a"][1]
+
+
+def test_many_flows_under_thread_switch_stress():
+    """More ready flows than cores, with a tiny thread switch interval:
+    every flow runs exactly once, after its dependencies, and emits
+    ``running`` then exactly one terminal event."""
+    import sys
+
+    ran: list[str] = []
+    pipe = Pipeline()
+    for c in range(12):
+        for depth in range(3):
+            name = f"c{c}_{depth}"
+            deps = (f"c{c}_{depth - 1}",) if depth else ()
+            if depth == 2 and c:
+                deps += (f"c{c - 1}_1",)  # cross-chain edges
+            pipe.add(Flow(name, lambda name=name: ran.append(name) or len(name),
+                          depends_on=deps))
+    events = []
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        out = pipe.run_all(on_event=events.append)
+    finally:
+        sys.setswitchinterval(old)
+    assert out == {n: len(n) for n in pipe.topo_order()}
+    assert sorted(ran) == sorted(pipe.flows)
+    for n, flow in pipe.flows.items():
+        mine = [e["status"] for e in events if e["flow"] == n]
+        assert mine == ["running", "succeeded"], n
+        for dep in flow.depends_on:
+            assert ran.index(dep) < ran.index(n), (n, dep)
+
+
+def test_events_run_on_the_calling_thread():
+    callers, runners = set(), set()
+
+    def run():
+        runners.add(threading.get_ident())
+        return 1
+
+    pipe = Pipeline()
+    for n, deps in (("a", ()), ("b", ()), ("c", ("a", "b"))):
+        pipe.add(Flow(n, run, depends_on=deps))
+    pipe.run_all(on_event=lambda evt: callers.add(threading.get_ident()))
+    assert callers == {threading.get_ident()}
+    assert threading.get_ident() not in runners
+
+
+def test_halt_on_failure_lets_running_branch_finish():
+    """After a failure no new flow starts; a flow already running
+    finishes and gets its terminal event; the ORIGINAL error object is
+    re-raised."""
+    failed_seen = threading.Event()
+    slow_started = threading.Event()
+    err = RuntimeError("boom")
+
+    def slow():
+        slow_started.set()
+        assert failed_seen.wait(30)  # still running when the failure lands
+        return 7
+
+    def bad():
+        assert slow_started.wait(30)
+        raise err
+
+    events = []
+
+    def observe(evt):
+        events.append(evt)
+        if evt["status"] == "failed":
+            failed_seen.set()
+
+    pipe = Pipeline()
+    pipe.add(Flow("slow", slow))
+    pipe.add(Flow("after_slow", lambda: 1, depends_on=("slow",)))
+    pipe.add(Flow("bad", bad))
+    pipe.add(Flow("after_bad", lambda: 1, depends_on=("bad",)))
+    with pytest.raises(RuntimeError) as info:
+        pipe.run_all(on_event=observe)
+    assert info.value is err
+    statuses = [(e["flow"], e["status"]) for e in events]
+    i_fail = statuses.index(("bad", "failed"))
+    assert not any(s == "running" for _, s in statuses[i_fail:])
+    assert ("slow", "succeeded") in statuses[i_fail:]
+    assert {f for f, _ in statuses} == {"slow", "bad"}
+
+
+def test_spark_locals_reach_flow_threads(spark, tmp_path):
+    """A job group set by the caller covers every Spark job the
+    concurrent ingest and flows run on their own threads."""
+    import datetime as dt
+
+    from end_to_end_azure_databricks_data_engineering_project_spark.config import TABLE_BY_NAME
+    from end_to_end_azure_databricks_data_engineering_project_spark.sources.ingest import ingest_all
+    from end_to_end_azure_databricks_data_engineering_project_spark.sources.watermark import (
+        WatermarkStore,
+    )
+    from end_to_end_azure_databricks_data_engineering_project_spark.streaming.flows import (
+        build_medallion_pipeline,
+    )
+
+    t0 = dt.datetime(2025, 1, 1)
+    sources = {
+        "dim_user": spark.createDataFrame(
+            [(i, f"u{i}", "US", "Free", None, None, t0) for i in range(5)],
+            TABLE_BY_NAME["dim_user"].spark_schema,
+        ),
+        "dim_artist": spark.createDataFrame(
+            [(i, f"a{i}", "Pop", "US", t0) for i in range(7)],
+            TABLE_BY_NAME["dim_artist"].spark_schema,
+        ),
+    }
+    cfgs = [TABLE_BY_NAME[t] for t in sources]
+    pipe, _ = build_medallion_pipeline(
+        spark, cfgs, str(tmp_path / "bronze"), str(tmp_path / "wh"),
+        str(tmp_path / "state"),
+    )
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup())
+    sc.setJobGroup("dag-locals", "medallion run")
+    try:
+        ingest_all(spark, cfgs, sources, str(tmp_path / "bronze"),
+                   WatermarkStore(tmp_path / "state"))
+        out = pipe.run_all()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert out == {"silver_dim_user": 5, "gold_dim_user": 5,
+                   "silver_dim_artist": 7, "gold_dim_artist": 7}
+    assert tracker.getJobIdsForGroup("dag-locals")
+    assert set(tracker.getJobIdsForGroup()) - ungrouped == set()
+
+
+def test_no_spark_context_runs_plain_callables(monkeypatch):
+    from pyspark import SparkContext
+
+    from end_to_end_azure_databricks_data_engineering_project_spark.session import (
+        inherit_spark_locals,
+    )
+
+    monkeypatch.setattr(SparkContext, "_active_spark_context", None)
+
+    def f():
+        return 3
+
+    assert inherit_spark_locals(f) is f
+    pipe = Pipeline()
+    pipe.add(Flow("a", f))
+    pipe.add(Flow("b", f, depends_on=("a",)))
+    assert pipe.run_all() == {"a": 3, "b": 3}
