@@ -17,6 +17,8 @@ Design for 100 TB:
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -393,6 +395,31 @@ def _small_star(e: DataFrame) -> DataFrame:
     )
 
 
+def _observed(obs, timeout_s: float = 30.0) -> dict | None:
+    """``obs.get``, or None if the metrics have not arrived within
+    ``timeout_s``. ``obs.get`` blocks until the observed plan has run,
+    forever if it never does (the public Observation API has no
+    non-blocking read), so it is read on a daemon thread and the wait
+    is bounded; an error raised by ``obs.get`` is re-raised here."""
+    box: list = []
+
+    def read():
+        try:
+            box.append((True, obs.get))
+        except Exception as exc:  # noqa: BLE001 - re-raised below
+            box.append((False, exc))
+
+    reader = threading.Thread(target=read, daemon=True)
+    reader.start()
+    reader.join(timeout_s)
+    if not box:
+        return None
+    ok, value = box[0]
+    if not ok:
+        raise value
+    return value
+
+
 def connected_components(
     pairs: DataFrame,
     src: str = "id_a",
@@ -451,29 +478,21 @@ def connected_components(
             ).alias("digest"),
         )
         e = stepped.localCheckpoint(eager=True)
-        # TAMPER GUARD (r13 verdict #4): obs.get blocks FOREVER if the
-        # observed subtree never executed (e.g. the checkpoint above
-        # made lazy, or the observe moved below a prunable branch — the
-        # bpe rejection note proved the hang empirically). The eager
-        # checkpoint is what populates it; verify via the JVM side's
-        # NON-BLOCKING getOrEmpty before the blocking read, so a future
-        # edit fails loudly instead of deadlocking. In this Spark build
-        # getOrEmpty on an UNSET observation throws NPE (Row.empty has a
-        # null schema — Observation.scala:116), so the NPE *is* the
-        # "never executed" signal; any other py4j drift falls through to
-        # the blocking read (pinned by
+        # TAMPER GUARD: obs.get blocks FOREVER if the observed subtree
+        # never executed (e.g. the checkpoint above made lazy, or the
+        # observe moved below a prunable branch — the bpe rejection
+        # note proved the hang empirically). The eager checkpoint is
+        # what populates it; a bounded wait makes a future edit fail
+        # loudly instead of deadlocking, and tolerates a Spark whose
+        # observations arrive shortly after the job (pinned by
         # tests/test_r14_advice.py::test_observation_probe_*).
-        try:
-            populated = not obs._jo.getOrEmpty().isEmpty()
-        except Exception as exc:  # noqa: BLE001
-            populated = "NullPointerException" not in str(exc)
-        if not populated:
+        row = _observed(obs)
+        if row is None:
             raise RuntimeError(
                 "connected_components: fixpoint observation not populated "
                 "— the eager localCheckpoint must execute the observed "
                 "node before obs.get, or this call would deadlock"
             )
-        row = obs.get  # available: the eager checkpoint already ran
         cur = (row["n"], row["digest"])
         if cur == prev:
             break

@@ -163,6 +163,20 @@ def pareto_frontier_2d(df: DataFrame, x_col: str, y_col: str) -> DataFrame:
     )
 
 
+def _is_columnar_file_scan(df: DataFrame) -> bool:
+    """True when ``df``'s optimized plan is only projections and filters
+    over one parquet/ORC file relation, so a one-column branch of it
+    reads just that column."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    while plan.nodeName() in ("Project", "Filter"):
+        plan = plan.children().head()
+    if plan.getClass().getSimpleName() != "LogicalRelation":
+        return False
+    rel = plan.relation()
+    return (rel.getClass().getSimpleName() == "HadoopFsRelation"
+            and rel.fileFormat().shortName() in ("parquet", "orc"))
+
+
 def table_profile(df: DataFrame, cols: Sequence[str]) -> DataFrame:
     """Single-scan column profile: one row per column with null count,
     distinct count, and min/max (cast to string AFTER aggregating, so
@@ -178,8 +192,14 @@ def table_profile(df: DataFrame, cols: Sequence[str]) -> DataFrame:
     (map-side partial agg → the shuffle carries only distinct values of
     THAT column), then a 1-row rollup derives nulls/distinct/min/max.
     Each branch's scan is pruned to its single column, so total bytes
-    read stay one table pass; no Expand anywhere. Results are
-    bit-identical (counts and min/max are order-independent)."""
+    read stay one table pass; no Expand anywhere. Any other input (a
+    join, an aggregate, a UDF, in-memory or row-format data) would
+    re-run its whole upstream once per branch, so the profiled columns
+    are materialized once with an eager ``localCheckpoint`` first.
+    Results are bit-identical (counts and min/max are
+    order-independent)."""
+    if len(cols) > 1 and not _is_columnar_file_scan(df):
+        df = df.select(*cols).localCheckpoint(eager=True)
     parts = []
     for c in cols:
         per_val = (

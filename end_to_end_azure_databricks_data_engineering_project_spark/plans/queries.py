@@ -46,6 +46,7 @@ from end_to_end_azure_databricks_data_engineering_project_spark.operators.skew i
     salted_latest_per_key,
 )
 from end_to_end_azure_databricks_data_engineering_project_spark.operators.transforms import bucketize
+from end_to_end_azure_databricks_data_engineering_project_spark.sources.readers import read_parquet
 
 DEC = "decimal(18,2)"
 
@@ -70,7 +71,7 @@ def _read_events_raw(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, str]:
     the driver ships a third encoding."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
+    df = read_parquet(spark, f"{sf_dir}/events.parquet")
     return df, dict(df.dtypes).get("ts", "")
 
 
@@ -104,7 +105,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         df, ts_type = _read_events_raw(spark, sf_dir)
         return _events_ts_ntz(df, ts_type)
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
 def _dec(c: str):
@@ -8696,7 +8697,7 @@ def q_stream_table_source(spark, sf):
         .start()
     )
     q.awaitTermination(120)
-    return spark.read.parquet(out)
+    return read_parquet(spark, out)
 
 
 @_q(

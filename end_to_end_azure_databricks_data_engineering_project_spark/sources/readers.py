@@ -6,6 +6,17 @@ reads parquet folders; watermark state is JSON. Equivalents here:
 
  - parquet/json/csv: direct ``spark.read`` with declared schemas
    (never inferSchema in production paths);
+ - parquet without a declared schema (the query catalog's input
+   tables): ``read_parquet`` memoizes the inferred ``StructType``.
+   Inference runs one Spark job per read; a repeat read of unchanged
+   files instead passes the remembered schema to ``spark.read.schema``,
+   which yields the relation inference would, with no job. The memo
+   holds one schema per (resolved local path, session values of the
+   confs that change parquet inference: ``_INFERENCE_CONFS``) and is
+   valid only while the name, inode, ``st_mtime_ns`` and size of every
+   file under the path are unchanged; anything else infers again.
+   Non-local or glob paths always infer. Concurrent first reads may
+   both infer (no lock; the results are equal);
  - jdbc: pushdown-query reader — the watermark predicate is embedded in
    the pushed SQL exactly like ADF's ``sqlReaderQuery`` (the whole
    filter runs source-side);
@@ -18,16 +29,60 @@ raises a clear error (import-try-style gating — no Azure dependency).
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from end_to_end_azure_databricks_data_engineering_project_spark.operators.transforms import cast_to_schema
 
+#: session confs whose values change the schema parquet inference yields
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+)
+
+# (resolved path, conf values) -> (file fingerprint, inferred schema)
+_SCHEMAS: dict[tuple, tuple[tuple, T.StructType]] = {}
+
+
+def _local_files(path: str) -> tuple[str, tuple] | None:
+    """(resolved path, (name, inode, mtime_ns, size) of every file under
+    it), or None for a URI, a glob or a missing path."""
+    if any(ch in path for ch in ":*?[{"):
+        return None
+    root = os.path.realpath(path)
+    names = [root]
+    if os.path.isdir(root):
+        names = sorted(os.path.join(d, n) for d, _, ns in os.walk(root) for n in ns)
+    try:
+        stats = [os.stat(n) for n in names]
+    except OSError:  # missing or racing a rewrite: let Spark read (or fail)
+        return None
+    return root, tuple((n, st.st_ino, st.st_mtime_ns, st.st_size)
+                       for n, st in zip(names, stats))
+
 
 def read_parquet(
     spark: SparkSession, path: str, schema: T.StructType | None = None
 ) -> DataFrame:
-    df = spark.read.parquet(path)
+    """Parquet at ``path``; the inferred schema is memoized (see the
+    module docstring), and cast to ``schema`` when one is declared."""
+    local = _local_files(path)
+    if local is None:
+        df = spark.read.parquet(path)
+    else:
+        root, files = local
+        key = (root, tuple(spark.conf.get(k) for k in _INFERENCE_CONFS))
+        hit = _SCHEMAS.get(key)
+        if hit is not None and hit[0] == files:
+            df = spark.read.schema(hit[1]).parquet(path)
+        else:
+            df = spark.read.parquet(path)
+            _SCHEMAS[key] = (files, df.schema)
     return cast_to_schema(df, schema) if schema else df
 
 

@@ -8,8 +8,8 @@
    null-pad the shorter tables' sign bits to 0).
 3. ``arrow_cosine_scores`` raises on NULL ELEMENTS inside an embedding
    array (top-level null_count misses them; they would become NaN).
-4. The connected-components fixpoint guard's non-blocking JVM probe
-   (``Observation._jo.getOrEmpty``) actually distinguishes an executed
+4. The connected-components fixpoint guard's bounded read of the
+   observation (``dedup._observed``) actually distinguishes an executed
    observation from a never-executed one — the property the deadlock
    guard in ``connected_components`` relies on.
 """
@@ -97,25 +97,22 @@ def test_arrow_cosine_raises_on_inner_null_element(spark):
 
 
 # ------------------------------------------------- 4. observation probe
-def _observation_populated(obs) -> bool:
-    """The exact probe connected_components' deadlock guard uses."""
-    try:
-        return not obs._jo.getOrEmpty().isEmpty()
-    except Exception as exc:  # noqa: BLE001
-        return "NullPointerException" not in str(exc)
-
-
 def test_observation_probe_detects_unexecuted(spark):
-    """The CC deadlock guard probes the JVM observation non-blockingly:
-    an observation whose plan never ran must read as NOT populated (in
-    this Spark build getOrEmpty NPEs on the unset Row — that NPE is the
-    signal), and a populated one as populated. If this test fails after
-    a Spark upgrade, revisit the guard in connected_components."""
+    """The CC deadlock guard reads the observation with a bounded wait:
+    an observation whose plan never ran must read as NOT populated once
+    the wait runs out, and a populated one must return its metrics. If
+    this test fails after a Spark upgrade, revisit the guard in
+    connected_components."""
     from pyspark.sql import Observation
+
+    from end_to_end_azure_databricks_data_engineering_project_spark.operators.dedup import (
+        _observed,
+    )
 
     obs = Observation()
     df = spark.range(10).observe(obs, F.count(F.lit(1)).alias("n"))
-    assert not _observation_populated(obs)  # never executed
+    assert _observed(obs, timeout_s=1.0) is None  # never executed
+    # running the plan also releases the reader the probe left waiting
     df.write.mode("overwrite").format("noop").save()
-    assert _observation_populated(obs)
+    assert _observed(obs)["n"] == 10
     assert obs.get["n"] == 10

@@ -187,6 +187,55 @@ def test_table_profile_values(spark):
     )
 
 
+def test_table_profile_runs_a_computed_upstream_once(spark):
+    """A non-scan input is materialized once, not re-run per column: an
+    upstream Python UDF sees each row exactly once."""
+    from pyspark.sql import functions as F
+
+    from end_to_end_azure_databricks_data_engineering_project_spark.operators.transforms import (
+        table_profile,
+    )
+
+    calls = spark.sparkContext.accumulator(0)
+
+    @F.udf("boolean")
+    def keep(i):
+        calls.add(1)
+        return i % 5 != 0
+
+    n = 40
+    df = (
+        spark.range(n)
+        .filter(keep("id"))
+        .select(F.col("id").alias("a"), (F.col("id") % 3).alias("b"),
+                F.when(F.col("id") % 4 == 0, None).otherwise(F.col("id")).alias("c"))
+    )
+    prof = {r["column_name"]: r for r in table_profile(df, ["a", "b", "c"]).collect()}
+    assert calls.value == n
+    ids = [i for i in range(n) if i % 5]
+    c_vals = [i for i in ids if i % 4]
+    assert tuple(prof["a"][k] for k in ("n_nulls", "n_distinct", "min_value", "max_value")) == (
+        0, len(ids), str(min(ids)), str(max(ids)))
+    assert (prof["b"]["n_distinct"], prof["b"]["min_value"], prof["b"]["max_value"]) == (3, "0", "2")
+    assert tuple(prof["c"][k] for k in ("n_nulls", "n_distinct", "min_value", "max_value")) == (
+        len(ids) - len(c_vals), len(c_vals), str(min(c_vals)), str(max(c_vals)))
+
+
+def test_table_profile_checkpoints_only_non_scan_inputs(spark, tmp_path):
+    from end_to_end_azure_databricks_data_engineering_project_spark.operators.transforms import (
+        _is_columnar_file_scan,
+    )
+
+    path = str(tmp_path / "p")
+    spark.range(10).selectExpr("id", "id * 2 AS y").write.parquet(path)
+    scan = spark.read.parquet(path)
+    assert _is_columnar_file_scan(scan)
+    assert _is_columnar_file_scan(scan.filter("id > 2").select("y"))
+    assert not _is_columnar_file_scan(scan.join(scan.select("id"), "id"))
+    assert not _is_columnar_file_scan(scan.groupBy("y").count())
+    assert not _is_columnar_file_scan(spark.range(3))
+
+
 # ----------------------------------------------------------- CMS sketch --
 def test_cms_overestimates_never_under(spark):
     from end_to_end_azure_databricks_data_engineering_project_spark.operators.sketches import (
