@@ -91,12 +91,30 @@ def shingle_relation(
     respectively — consumers that must exclude blank docs filter
     ``shingle != ''`` (exactly the rows blank text produces; non-blank
     text can never emit an empty shingle because concat_ws over >= 1
-    token is non-empty)."""
+    token is non-empty).
+
+    The ``shingle`` column's metadata records ``n`` (``shingle_n``), and
+    every ``shingles_df=`` consumer raises ``ValueError`` when it differs
+    from the consumer's own ``shingle_n``/``n``."""
     return docs.select(
         F.col(id_col).alias("doc_id"), tokens(F.col(text_col)).alias("_toks")
     ).select(
         "doc_id", F.explode(shingles_from_tokens(F.col("_toks"), n)).alias("shingle")
+    ).select(
+        # a generator's alias drops metadata, so it is attached here
+        "doc_id", F.col("shingle").alias("shingle", metadata={"shingle_n": n})
     )
+
+
+def _checked_shingles(shingles_df: DataFrame, n: int) -> DataFrame:
+    """``shingles_df`` once its recorded shingle size is ``n``."""
+    got = shingles_df.schema["shingle"].metadata.get("shingle_n")
+    if got != n:
+        raise ValueError(
+            f"shingles_df holds shingle_n={got} shingles but the caller "
+            f"asked for {n}; build it with shingle_relation(..., n={n})"
+        )
+    return shingles_df
 
 
 def _hash_shingle(s: Column, seed: int) -> Column:
@@ -144,7 +162,8 @@ def minhash_components(
     shingle_relation)."""
     if shingles_df is not None:
         base = (
-            shingles_df.filter(F.col("shingle") != "")
+            _checked_shingles(shingles_df, shingle_n)
+            .filter(F.col("shingle") != "")
             .select(
                 F.col("doc_id").alias(id_col),
                 (_hash_shingle(F.col("shingle"), 0) % MINHASH_P).alias("__h"),
@@ -817,7 +836,7 @@ def exact_jaccard_join(
     # cached by the caller) skips both the rebuild and the double-cache.
     sh = (
         shingle_relation(docs, id_col, text_col, n).cache()
-        if shingles_df is None else shingles_df
+        if shingles_df is None else _checked_shingles(shingles_df, n)
     )
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
     dfreq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
@@ -892,7 +911,7 @@ def exact_containment_join(
     t = float(threshold)
     sh = (
         shingle_relation(docs, id_col, text_col, n).cache()
-        if shingles_df is None else shingles_df
+        if shingles_df is None else _checked_shingles(shingles_df, n)
     )
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
     dfreq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))

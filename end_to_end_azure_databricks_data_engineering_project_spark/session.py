@@ -20,7 +20,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -89,3 +89,18 @@ def inherit_spark_locals(fn):
     if session is None:
         return inheritable_thread_target(fn)
     return inheritable_thread_target(session)(fn)
+
+
+def empty_frame(spark: SparkSession, schema) -> DataFrame:
+    """An empty DataFrame with ``schema`` (a ``StructType`` or a DDL
+    string; names, types, nullability and field metadata are kept) that
+    the optimizer knows is empty.
+
+    Do not build one from a Python list (``createDataFrame([], schema)``):
+    on classic PySpark that is a ``LogicalRDD`` over a Python RDD with
+    one partition per core, so every scan of it launches that many
+    Python-worker tasks, and Catalyst cannot see that it is empty, so
+    ``PropagateEmptyRelation`` cannot prune the unions and joins it
+    feeds. ``emptyRDD`` has no partitions, and ``limit(0)`` lets
+    ``OptimizeLimitZero`` rewrite the plan to an empty ``LocalRelation``."""
+    return spark.createDataFrame(spark.sparkContext.emptyRDD(), schema).limit(0)

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from . import deltalog
+from ..session import empty_frame
 
 
 def _checkpoint_state(log: Path) -> tuple[int, dict, dict, dict] | None:
@@ -187,7 +188,7 @@ def read_delta(spark: SparkSession, table_dir: str | Path) -> DataFrame:
     ptypes = {f.name: f.dataType for f in full.fields if f.name in pcols}
 
     if not adds:
-        return spark.createDataFrame([], full)
+        return empty_frame(spark, full)
     groups: dict[tuple, list[str]] = {}
     dv_names: set[str] = set()
     any_dv = False

@@ -59,6 +59,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import deltalog
+from ..session import empty_frame
 
 try:  # Delta OSS if its jars are ever present; else versioned parquet.
     from delta.tables import DeltaTable  # type: ignore
@@ -1378,7 +1379,7 @@ class ManagedTable:
         """Current snapshot, or an empty frame with ``like``'s schema."""
         if self.exists():
             return self.read()
-        return self.spark.createDataFrame([], like.schema)
+        return empty_frame(self.spark, like.schema)
 
     def _write_op_marker(self, v: int, op: str) -> None:
         (self._version_dir(v) / "_op").write_text(op)
@@ -1601,7 +1602,7 @@ class ManagedTable:
                     from pyspark.sql.types import StructType
 
                     schema = StructType([])
-                return self.spark.createDataFrame([], schema)
+                return empty_frame(self.spark, schema)
             return _plain(names)
         clean = [n for n in names if not dv_map.get(n)]
         out_cols = [f.name for f in schema.fields]
@@ -2327,7 +2328,7 @@ class ManagedTable:
         files = self.pruned_files(predicates)
         schema = self.table_schema()
         if not files:
-            df = self.spark.createDataFrame([], schema or self.read().schema)
+            df = empty_frame(self.spark, schema or self.read().schema)
         elif self.store in files[0].parents:
             # store layout: pin the committed schema like read()/
             # read_at (mixed pre/post-evolution files) and fold
@@ -2416,8 +2417,8 @@ class ManagedTable:
             # frame just for .schema costs an O(table) driver file
             # listing (legacy pre-schema tables still fall back)
             s = self.table_schema(cur)
-            return self.spark.createDataFrame(
-                [], s if s is not None else self.read().schema
+            return empty_frame(
+                self.spark, s if s is not None else self.read().schema
             )
 
         if v >= cur:
@@ -2495,7 +2496,7 @@ class ManagedTable:
 
         def _read(paths):
             if not paths:
-                return self.spark.createDataFrame([], schema or self.read().schema)
+                return empty_frame(self.spark, schema or self.read().schema)
             reader = self.spark.read.schema(schema) if schema is not None else self.spark.read
             store_prefix = str(self.store) + os.sep
             if all(p.startswith(store_prefix) for p in paths):
@@ -2836,7 +2837,7 @@ class ManagedTable:
                     StructField("_commit_timestamp", TimestampType(), True),
                 ]
             )
-            return self.spark.createDataFrame([], empty)
+            return empty_frame(self.spark, empty)
         data_cols = [c for c in out.columns if c not in meta_cols]
         return out.select(*data_cols, *meta_cols)
 
@@ -3502,7 +3503,7 @@ class ManagedTable:
         if self._epoch_already_applied(epoch, epoch_key):
             return None
         if not self.exists():
-            empty = self.spark.createDataFrame([], batch.schema)
+            empty = empty_frame(self.spark, batch.schema)
             return self.overwrite(merge_fn(empty, batch), epoch, epoch_key)
         v = self.current_version()
         res = self._resolve(v)
@@ -3594,8 +3595,8 @@ class ManagedTable:
             )
         else:
             stored = self.table_schema(v)
-            subset = self.spark.createDataFrame(
-                [], stored if stored is not None else self.read().schema
+            subset = empty_frame(
+                self.spark, stored if stored is not None else self.read().schema
             )
         # Schema is enforced on the merge OUTPUT (the batch legitimately
         # differs — e.g. CDC batches lack the SCD bookkeeping columns
@@ -3680,7 +3681,7 @@ class ManagedTable:
                         reader.parquet(*[str(self.store / n) for n in names]),
                         schema,
                     )
-                    if names else self.spark.createDataFrame([], schema)
+                    if names else empty_frame(self.spark, schema)
                 )
                 # align the OLD side to the (possibly evolved) committed
                 # schema: after merge_keyed(evolve=True) the pre-merge
@@ -6062,7 +6063,7 @@ class Catalog:
             cols_ddl, col_meta = self._parse_generated_clauses(cols_ddl)
             # Spark's DDL parser is the schema authority (types,
             # NOT NULL, comments all parse exactly as spark.sql would)
-            empty = self.spark.createDataFrame([], cols_ddl)
+            empty = empty_frame(self.spark, cols_ddl)
             hw_props: dict = {}
             gen_checks: list[tuple[str, str]] = []
             if col_meta:
@@ -6097,7 +6098,7 @@ class Catalog:
                     fields.append(
                         StructField(f.name, f.dataType, f.nullable, md)
                     )
-                empty = self.spark.createDataFrame([], StructType(fields))
+                empty = empty_frame(self.spark, StructType(fields))
             committed = t.overwrite(
                 empty, partition_by=partition_by, enable_cdf=enable_cdf,
                 set_props=hw_props or None,
@@ -6146,9 +6147,7 @@ class Catalog:
             if am:
                 from pyspark.sql.types import StructField, StructType
 
-                new_fields = self.spark.createDataFrame(
-                    [], am.group(1)
-                ).schema.fields
+                new_fields = empty_frame(self.spark, am.group(1)).schema.fields
                 stored = t.table_schema()
                 if stored is None:
                     raise ValueError(
@@ -6172,7 +6171,7 @@ class Catalog:
                 # carries the identity/generated columns (they are part
                 # of the schema being widened), not explicit values
                 t.append(
-                    self.spark.createDataFrame([], evolved), evolve=True,
+                    empty_frame(self.spark, evolved), evolve=True,
                     _apply_policies=False,
                 )
                 return None

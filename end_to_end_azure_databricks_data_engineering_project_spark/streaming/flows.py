@@ -23,6 +23,7 @@ Design choices vs the reference:
 
 from __future__ import annotations
 
+import functools
 import os
 import time
 from collections.abc import Callable, Sequence
@@ -358,13 +359,20 @@ def gold_flow(
     whole SCD2 history (GDPR — close isn't erasure), 'ignore' keeps
     the old upsert-only behavior.
 
-    The change-feed leg folds PER SILVER COMMIT, not one union over the
-    whole range: within one commit a delete+insert of the same key IS
-    an update (snapshot-diff pairing is exact), but across commits the
-    pairing loses ordering — an update in commit 3 plus a true delete
-    in commit 5 must not cancel into "update". Per-commit folding costs
-    one feed read per non-append commit in the drained range (usually
-    0–1 per maintenance cadence) and keeps every apply key-local.
+    The change feed is paired PER SILVER COMMIT, not as one feed over
+    the whole range: within one commit a delete+insert of the same key
+    IS an update (snapshot-diff pairing is exact), but across commits
+    the pairing loses ordering — an update in commit 3 plus a true
+    delete in commit 5 must not cancel into "update". The per-commit
+    batches are then tagged with their commit ordinal and gated as one
+    union, and the gate aggregation also reports whether any key has
+    rows in two commits. When no key does, ONE SCD merge applies the
+    whole range. That is exact: both SCD merges are key-local (a key's
+    outcome depends only on its own rows — ``merge_keyed``'s contract),
+    and every key's rows come from a single commit, so each key sees
+    exactly the rows its per-commit merge would have seen. When a key
+    does span commits, the drain merges the commits one at a time, in
+    commit order, as before.
 
     Only a genuine snapshot replacement (overwrite / restore) still
     falls back to the full re-read, which stays safe under the SCD
@@ -372,8 +380,10 @@ def gold_flow(
     deletes (nothing to diff against); a GDPR pipeline should avoid
     snapshot-replacing silver between drains."""
     DEL_FLAG = "__cdc_delete"
+    ORD = "__cdc_commit"
+    keys = list(cfg.keys)
 
-    def _apply(gold, batch: DataFrame, with_deletes: bool) -> int:
+    def _gate(batch: DataFrame, with_deletes: bool) -> DataFrame:
         if with_deletes:
             # expectation EXEMPTION for delete rows (r13): a delete
             # change row carries the deleted row's OLD column values;
@@ -383,47 +393,87 @@ def gold_flow(
             # on_delete='erase' a GDPR erasure request is silently
             # skipped. Expectations validate incoming row STATE, not
             # removals: gate upserts only, pass deletes through.
-            gated = (
-                expect_all_or_drop(
-                    batch.filter(~F.col(DEL_FLAG)), cfg.expectations,
-                    observe=False,
-                ).df
-                .unionByName(batch.filter(F.col(DEL_FLAG)))
-                .cache()
-            )
+            gated = expect_all_or_drop(
+                batch.filter(~F.col(DEL_FLAG)), cfg.expectations,
+                observe=False,
+            ).df.unionByName(batch.filter(F.col(DEL_FLAG)))
         else:
             gated = expect_all_or_drop(
                 batch, cfg.expectations, observe=False
-            ).df.cache()
+            ).df
         # cache: the gated batch feeds count, key discovery and the
         # merge write — one silver scan + expectation filter, not three
+        return gated.cache()
+
+    def _key_bounds() -> list:
+        # r14 (guide §2.4): the gate count and the merge's file-prune
+        # key bounds ride ONE aggregation job (previously count here
+        # + a second bounds pass inside merge_keyed per apply).
+        aggs = []
+        for i, k in enumerate(keys):
+            aggs.append(F.min(F.col(k)).alias(f"__lo{i}"))
+            aggs.append(F.max(F.col(k)).alias(f"__hi{i}"))
+        return aggs
+
+    def _merge(gold, gated: DataFrame, stat, with_deletes: bool) -> int:
+        n = stat["__n"] or 0  # a sum over zero keys is NULL
+        if n > 0:
+            apply_changes(
+                gold, gated,
+                keys=keys, sequence_by=cfg.cdc_col,
+                scd_type=cfg.scd_type,
+                delete_expr=DEL_FLAG if with_deletes else None,
+                except_columns=(DEL_FLAG,) if with_deletes else (),
+                delete_mode="erase" if cfg.on_delete == "erase" else "close",
+                key_bounds={
+                    k: (stat[f"__lo{i}"], stat[f"__hi{i}"])
+                    for i, k in enumerate(keys)
+                },
+            )
+        return n
+
+    def _count_and_bounds(gated: DataFrame):
+        return gated.agg(F.count(F.lit(1)).alias("__n"), *_key_bounds()).first()
+
+    def _apply(gold, batch: DataFrame, with_deletes: bool) -> int:
+        gated = _gate(batch, with_deletes)
         try:
-            # r14 (guide §2.4): the gate count and the merge's file-prune
-            # key bounds ride ONE aggregation job (previously count here
-            # + a second bounds pass inside merge_keyed per apply).
-            keys = list(cfg.keys)
-            aggs = [F.count(F.lit(1)).alias("__n")]
-            for i, k in enumerate(keys):
-                aggs.append(F.min(F.col(k)).alias(f"__lo{i}"))
-                aggs.append(F.max(F.col(k)).alias(f"__hi{i}"))
-            stat = gated.agg(*aggs).first()
-            n = stat["__n"]
-            if n > 0:
-                apply_changes(
-                    gold, gated,
-                    keys=keys, sequence_by=cfg.cdc_col,
-                    scd_type=cfg.scd_type,
-                    delete_expr=DEL_FLAG if with_deletes else None,
-                    except_columns=(DEL_FLAG,) if with_deletes else (),
-                    delete_mode="erase" if cfg.on_delete == "erase" else "close",
-                    key_bounds={
-                        k: (stat[f"__lo{i}"], stat[f"__hi{i}"])
-                        for i, k in enumerate(keys)
-                    },
-                )
+            return _merge(gold, gated, _count_and_bounds(gated), with_deletes)
         finally:
             gated.unpersist()
-        return n
+
+    def _apply_commits(gold, batches: list[DataFrame], with_deletes: bool) -> int:
+        """Apply per-commit batches in commit order: one merge when no
+        key has rows in two commits, one merge per commit otherwise."""
+        if len(batches) == 1:
+            return _apply(gold, batches[0], with_deletes)
+        tagged = [b.withColumn(ORD, F.lit(i)) for i, b in enumerate(batches)]
+        gated = _gate(functools.reduce(DataFrame.unionByName, tagged), with_deletes)
+        try:
+            # the gate count and key bounds fold per key first, so the
+            # same job also reports whether a key spans two commits
+            stat = (
+                gated.groupBy(*keys)
+                .agg(
+                    F.count(F.lit(1)).alias("__n"),
+                    (F.min(ORD) != F.max(ORD)).alias("__span"),
+                )
+                .agg(
+                    F.sum("__n").alias("__n"),
+                    F.max("__span").alias("__span"),
+                    *_key_bounds(),
+                )
+                .first()
+            )
+            if not stat["__span"]:
+                return _merge(gold, gated.drop(ORD), stat, with_deletes)
+            n = 0
+            for i in range(len(batches)):
+                part = gated.filter(F.col(ORD) == i).drop(ORD)
+                n += _merge(gold, part, _count_and_bounds(part), with_deletes)
+            return n
+        finally:
+            gated.unpersist()
 
     def run() -> int:
         silver = catalog.table(f"silver_{cfg.table}")
@@ -460,27 +510,27 @@ def gold_flow(
                     feeds.append(feed)
                     prev = vv
                 if feeds is not None:
-                    n = 0
-                    for feed in feeds:
-                        if cfg.on_delete == "ignore":
-                            batch = feed.filter(
+                    if cfg.on_delete == "ignore":
+                        batches = [
+                            feed.filter(
                                 F.col("_change_type").isin(
                                     "insert", "update_post"
                                 )
                             ).drop("_change_type")
-                            n += _apply(gold, batch, False)
-                        else:
-                            batch = (
-                                feed.filter(
-                                    F.col("_change_type") != "update_pre"
-                                )
-                                .withColumn(
-                                    DEL_FLAG,
-                                    F.col("_change_type") == "delete",
-                                )
-                                .drop("_change_type")
+                            for feed in feeds
+                        ]
+                    else:
+                        batches = [
+                            feed.filter(F.col("_change_type") != "update_pre")
+                            .withColumn(
+                                DEL_FLAG, F.col("_change_type") == "delete"
                             )
-                            n += _apply(gold, batch, True)
+                            .drop("_change_type")
+                            for feed in feeds
+                        ]
+                    n = _apply_commits(
+                        gold, batches, cfg.on_delete != "ignore"
+                    )
         if n is None:
             # No cursor yet, or a snapshot replacement (overwrite /
             # restore / legacy upgrade) in range: full read. Replaying

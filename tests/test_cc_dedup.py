@@ -14,8 +14,14 @@ from pyspark.sql import functions as F
 
 from end_to_end_azure_databricks_data_engineering_project_spark.operators.dedup import (
     connected_components,
+    exact_containment_join,
+    exact_jaccard_join,
+    minhash_band_index,
+    minhash_components,
     minhash_dedup,
     minhash_near_dup_pairs,
+    minhash_signature_df,
+    shingle_relation,
 )
 
 
@@ -420,3 +426,34 @@ def test_exact_dedup_drain_null_text(spark, tmp_path):
     dups = {(r.doc_id, r.dup_of)
             for r in catalog.table("exact_dups").read().collect()}
     assert dups == {(2, 1), (3, 1), (4, 1)}
+
+
+def test_shingles_df_must_match_shingle_n(spark):
+    """A shared ``shingle_relation`` carries its n; a consumer asked for
+    another n (or handed a relation without one) raises instead of
+    computing on the wrong shingles."""
+    docs = spark.createDataFrame(
+        [(1, "a b c d e"), (2, "a b c d f"), (3, "x y z")], ["doc_id", "text"]
+    )
+    sh3 = shingle_relation(docs, n=3).cache()
+    assert sh3.schema["shingle"].metadata == {"shingle_n": 3}
+    assert sorted(
+        minhash_components(docs, num_hashes=4, shingles_df=sh3).collect()
+    ) == sorted(minhash_components(docs, num_hashes=4).collect())
+    assert sorted(exact_jaccard_join(docs, 0.3, n=3, shingles_df=sh3).collect()) == sorted(
+        exact_jaccard_join(docs, 0.3, n=3).collect()
+    )
+    bare = spark.createDataFrame([(1, "a b c")], "doc_id bigint, shingle string")
+    calls = [
+        lambda sh: minhash_components(docs, shingle_n=2, shingles_df=sh),
+        lambda sh: minhash_signature_df(docs, shingle_n=2, shingles_df=sh),
+        lambda sh: minhash_band_index(docs, shingle_n=2, shingles_df=sh),
+        lambda sh: minhash_near_dup_pairs(docs, shingle_n=2, shingles_df=sh),
+        lambda sh: exact_jaccard_join(docs, 0.5, n=2, shingles_df=sh),
+        lambda sh: exact_containment_join(docs, 0.5, n=2, shingles_df=sh),
+    ]
+    for call in calls:
+        for sh in (sh3, bare):
+            with pytest.raises(ValueError, match="shingle_n"):
+                call(sh)
+    sh3.unpersist()

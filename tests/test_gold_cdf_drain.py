@@ -33,22 +33,26 @@ T0 = dt.datetime(2025, 1, 1)
 T1 = dt.datetime(2025, 6, 1)
 
 
-@pytest.fixture()
-def medallion(spark, tmp_path):
+def _build_medallion(spark, root):
     users = spark.createDataFrame(
         [(i, f"user {i}", "US", "Free", None, None, T0) for i in range(1, 6)],
         "user_id int, user_name string, country string, subscription_type string,"
         " start_date date, end_date date, updated_at timestamp",
     )
     cfgs = [TABLE_BY_NAME["dim_user"]]
-    store = WatermarkStore(tmp_path / "state")
-    ingest_all(spark, cfgs, {"dim_user": users}, str(tmp_path / "bronze"), store)
+    store = WatermarkStore(root / "state")
+    ingest_all(spark, cfgs, {"dim_user": users}, str(root / "bronze"), store)
     pipe, catalog = build_medallion_pipeline(
-        spark, cfgs, str(tmp_path / "bronze"), str(tmp_path / "warehouse"),
-        str(tmp_path / "state"),
+        spark, cfgs, str(root / "bronze"), str(root / "warehouse"),
+        str(root / "state"),
     )
     pipe.run_all()
     return pipe, catalog
+
+
+@pytest.fixture()
+def medallion(spark, tmp_path):
+    return _build_medallion(spark, tmp_path)
 
 
 def _spy_reads(monkeypatch):
@@ -211,6 +215,58 @@ def test_update_then_delete_across_commits_nets_to_delete(
     # v1 (US) closed at T1, v2 (DE) closed by the delete; nothing open
     assert [r["country"] for r in hist] == ["US", "DE"]
     assert all(r[END_AT] is not None for r in hist)
+
+
+@pytest.mark.parametrize(
+    ("append_key", "gold_merges"),
+    [(6, 1), (3, 2)],
+    ids=["disjoint-keys-one-merge", "key-in-both-commits-per-commit"],
+)
+def test_multi_commit_drain_matches_per_commit_drains(
+    spark, tmp_path, monkeypatch, append_key, gold_merges
+):
+    """A drain over a DELETE commit plus an APPEND commit merges gold
+    once when the two commits share no key, and once per commit when a
+    key has rows in both; either way gold ends exactly as it does when
+    the drain runs after each commit."""
+    def delete(catalog):
+        catalog.table("silver_dim_user").delete_where("user_id = 3")
+
+    def append(catalog):
+        silver = catalog.table("silver_dim_user")
+        row = silver.read().filter("user_id = 1").first().asDict()
+        row.update(user_id=append_key, user_name="late", updated_at=T1)
+        silver.append(spark.createDataFrame([row], silver.read().schema))
+
+    ref_pipe, ref_catalog = _build_medallion(spark, tmp_path / "ref")
+    ref_rows = 0
+    for commit in (delete, append):
+        commit(ref_catalog)
+        ref_rows += ref_pipe.flows["gold_dim_user"].run()
+
+    pipe, catalog = _build_medallion(spark, tmp_path / "one")
+    delete(catalog)
+    append(catalog)
+    merges: list[str] = []
+    orig = ManagedTable.merge_keyed
+
+    def merge_keyed(self, *args, **kwargs):
+        merges.append(self.name)
+        return orig(self, *args, **kwargs)
+
+    monkeypatch.setattr(ManagedTable, "merge_keyed", merge_keyed)
+    calls = _spy_reads(monkeypatch)
+    assert pipe.flows["gold_dim_user"].run() == ref_rows == 2
+    assert merges.count("gold_dim_user") == gold_merges
+    assert "silver_dim_user" not in calls
+
+    def rows(cat):
+        return sorted(
+            tuple(r) for r in cat.table("gold_dim_user").read().collect()
+        )
+
+    assert rows(catalog) == rows(ref_catalog)
+    assert pipe.flows["gold_dim_user"].run() == 0
 
 
 def test_erase_mode_purges_scd2_history(spark, tmp_path):
